@@ -1,7 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Central loaders for the driver-generated parquet fixture tables
   * (`TESTDATA.md`). One place encapsulates every read-side quirk so query
@@ -18,6 +21,24 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Inferred fixture schemas, per JVM, keyed by (sfDir, table). Parquet
+    * schema inference launches a Spark job on every plain read; with the
+    * memo a table's schema is inferred on its first load only, and later
+    * loads read with `.schema(...)`. Metadata only: every load still scans
+    * the table's data.
+    */
+  private val schemas = new ConcurrentHashMap[(String, String), StructType]()
+
+  /** Scan of `sfDir/name.parquet` with its memoized schema; `infer` runs on
+    * the first load of the table only.
+    */
+  private def read(spark: SparkSession, sfDir: String, name: String)(
+      infer: String => StructType): DataFrame = {
+    val path = s"$sfDir/$name.parquet"
+    val schema = schemas.computeIfAbsent((sfDir, name), _ => infer(path))
+    spark.read.schema(schema).parquet(path)
+  }
+
   /** Raw scan of one fixture table. Also ensures graft's native functions
     * are registered on the session (idempotent), since every query builder
     * enters through here.
@@ -25,7 +46,7 @@ object Tables {
   def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     graft.functions.ArrayMath.register(spark)
     if (name == "events") events(spark, sfDir)
-    else spark.read.parquet(s"$sfDir/$name.parquet")
+    else read(spark, sfDir, name)(spark.read.parquet(_).schema)
   }
 
   /** `events.parquet` has stored `ts` with two different parquet physical
@@ -49,19 +70,20 @@ object Tables {
     // as TimestampType so `ts` keeps one type across fixture generations and
     // unix_micros sees the raw stored micros (same value DuckDB's epoch_us
     // computes) independent of session timezone. UNLIKE nanosAsLong this
-    // flag only matters during the EAGER schema inference below (execution
+    // flag only matters during the schema inference below (execution
     // follows the frame's already-resolved schema — asserted in
     // FixturesSpec), so it is scoped: saved, set, restored — unrelated
     // parquet timestamp reads in the session keep their default typing.
     val ntzKey = "spark.sql.parquet.inferTimestampNTZ.enabled"
-    val prevNtz = spark.conf.getOption(ntzKey)
-    spark.conf.set(ntzKey, "false")
-    val raw =
-      try spark.read.parquet(s"$sfDir/events.parquet")
+    val raw = read(spark, sfDir, "events") { path =>
+      val prevNtz = spark.conf.getOption(ntzKey)
+      spark.conf.set(ntzKey, "false")
+      try spark.read.parquet(path).schema
       finally prevNtz match {
         case Some(v) => spark.conf.set(ntzKey, v)
         case None    => spark.conf.unset(ntzKey)
       }
+    }
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => // NANOS read as raw long
         raw.withColumnRenamed("ts", "ts_ns")

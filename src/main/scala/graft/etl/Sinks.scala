@@ -17,21 +17,25 @@ object Sinks {
 
   /** The session catalog is in-memory: a table written by a PREVIOUS JVM
     * leaves its warehouse location on disk but no catalog entry, and a
-    * naive saveAsTable then fails with LOCATION_ALREADY_EXISTS. Resolve
-    * per the intended save mode: re-register the orphan as a table (append
-    * keeps history) or remove it (truncate).
+    * naive saveAsTable or CREATE TABLE then fails with
+    * LOCATION_ALREADY_EXISTS. Resolve per the intended save mode:
+    * re-register the orphan as a table (append keeps history) or remove it
+    * (truncate). A declared `schema` is used for the re-registration, so an
+    * orphan location holding no data files is adopted too.
     */
   private def defaultPath(spark: SparkSession, table: String) = {
     val ident = spark.sessionState.sqlParser.parseTableIdentifier(table)
     new org.apache.hadoop.fs.Path(spark.sessionState.catalog.defaultTablePath(ident))
   }
 
-  private def adoptOrphanLocation(spark: SparkSession, table: String, keep: Boolean): Unit = {
+  private def adoptOrphanLocation(spark: SparkSession, table: String, keep: Boolean,
+                                  schema: Option[StructType] = None): Unit = {
     if (!spark.catalog.tableExists(table)) {
       val path = defaultPath(spark, table)
       val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
       if (fs.exists(path)) {
-        if (keep) spark.sql(s"CREATE TABLE $table USING parquet LOCATION '$path'")
+        val cols = schema.fold("")(st => s" (${st.toDDL})")
+        if (keep) spark.sql(s"CREATE TABLE $table$cols USING parquet LOCATION '$path'")
         else fs.delete(path, true)
       }
     }
@@ -66,10 +70,13 @@ object Sinks {
     spark.sql(s"CREATE DATABASE IF NOT EXISTS `$db`")
 
   /** K4 — idempotent typed empty-table creation (`airflow.py:57-84`,
-    * `exists_ok=True`).
+    * `exists_ok=True`). A location from an earlier run is re-registered
+    * first, as in [[appendTable]], so a re-run in a new JVM keeps its rows.
     */
-  def ensureTable(spark: SparkSession, table: String, schema: StructType): Unit =
+  def ensureTable(spark: SparkSession, table: String, schema: StructType): Unit = {
+    adoptOrphanLocation(spark, table, keep = true, Some(schema))
     spark.sql(s"CREATE TABLE IF NOT EXISTS $table (${schema.toDDL}) USING parquet")
+  }
 
   /** The declared-but-uninstantiated `BigQueryCheckOperator`
     * (`airflow.py:7`; SURVEY.md §2.8): a post-load SQL assertion — the first

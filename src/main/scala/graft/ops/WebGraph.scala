@@ -29,7 +29,7 @@ object WebGraph {
     * in the last ulp per partition-order, an integer one never.
     *
     * Scale shape: `edges` is distinct-ed and joined to its out-degree
-    * ONCE, persisted, and reused every iteration (the invariant side of
+    * ONCE, checkpointed, and reused every iteration (the invariant side of
     * the loop — at 100 TB this is the big frame, and re-deriving it per
     * iteration would re-shuffle the corpus k times). Each iteration is
     * one join (ranks are hash-partitioned on node, edges on src) plus
@@ -89,15 +89,17 @@ object WebGraph {
         col(dstCol).cast("string").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
-    val nodes = e.select(col("src").as("node"))
+    val nodesPre = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
-      .persist()
+      .observe("pr_nodes", count(lit(1)).as("__n"))
+    val nodes = nodesPre.localCheckpoint()
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
     // the loop-invariant frame: one row per edge with its src out-degree
-    val eo = e.join(outdeg, "src").persist()
+    val eo = e.join(outdeg, "src").localCheckpoint()
 
-    val n = nodes.count() // bounded driver traffic: one scalar
+    // bounded driver traffic: one scalar, observed on the checkpoint job
+    val n = nodesPre.queryExecution.observedMetrics("pr_nodes").getLong(0)
     require(n > 0, "pageRank: empty graph")
     val r0 = scale / n
     val base = (100L - dampingPct) * r0 / 100L
@@ -128,8 +130,6 @@ object WebGraph {
       ranks = next
       iter += 1
     }
-    nodes.unpersist()
-    eo.unpersist()
     (ranks, iter)
   }
 
@@ -156,7 +156,7 @@ object WebGraph {
     * named — pick a smaller α for hub-heavy graphs.
     *
     * Scale shape identical to [[pageRank]]: edges distinct-ed and
-    * persisted once, per-iteration one join keyed on src + one
+    * checkpointed once, per-iteration one join keyed on src + one
     * aggregation keyed on dst over skinny rank frames,
     * localCheckpoint per round, one scalar (max in-degree) to the
     * driver up front.
@@ -173,12 +173,7 @@ object WebGraph {
       s"iterations must be in [1,8], got $iterations")
     require(scale >= 1L && scale <= 1000000000L,
       s"scale must be in [1,1e9], got $scale")
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .persist()
+    val e = edgePlane(edges, srcCol, dstCol, "src", "dst", keepLoops = true)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
@@ -204,7 +199,6 @@ object WebGraph {
               s" div $alphaDen")).as("katz"))
         .localCheckpoint() // plan depth stays O(1), not O(iterations)
     }
-    e.unpersist()
     ranks
   }
 
@@ -223,7 +217,7 @@ object WebGraph {
     * summed mass; DuckDB replays the same step through HUGEINT).
     *
     * Same scale shape as [[pageRank]]: edges distinct-ed once and
-    * persisted, per-iteration work = two skinny joins + two
+    * checkpointed, per-iteration work = two skinny joins + two
     * aggregations, the two one-row normalization maxes riding the
     * half-step checkpoint jobs as observed metrics; hub/auth frames
     * localCheckpoint so the plan stays O(1) deep.
@@ -236,14 +230,10 @@ object WebGraph {
     require(iterations >= 1 && iterations <= 50,
       s"iterations must be in [1,50], got $iterations")
     require(scale > 0, s"scale must be > 0, got $scale")
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().persist()
+    val e = edgePlane(edges, srcCol, dstCol, "src", "dst", keepLoops = true)
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct().persist()
+      .distinct().localCheckpoint()
     require(!e.isEmpty, "hits: empty graph")
 
     // normalize a raw (node, v) frame: (v * SCALE) div max(v), decimal
@@ -280,10 +270,7 @@ object WebGraph {
         .select(col("node"), coalesce(col("__rh"), lit(0L)).as("__rh"))
       hub = normalized(rawH, "__rh", "hub")
     }
-    val out = hub.join(auth, "node")
-    nodes.unpersist()
-    e.unpersist()
-    out
+    hub.join(auth, "node")
   }
 
   /** Weighted PageRank — [[pageRank]] with per-edge weights (the
@@ -310,13 +297,15 @@ object WebGraph {
         col(weightCol).cast("long").as("w"))
       .filter(col("src").isNotNull && col("dst").isNotNull && col("w") > 0)
       .groupBy("src", "dst").agg(sum("w").as("w"))
-    val nodes = e.select(col("src").as("node"))
+    val nodesPre = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
-      .distinct().persist()
+      .distinct()
+      .observe("pr_nodes", count(lit(1)).as("__n"))
+    val nodes = nodesPre.localCheckpoint()
     val outw = e.groupBy("src").agg(sum("w").as("outw"))
-    val eo = e.join(outw, "src").persist()
+    val eo = e.join(outw, "src").localCheckpoint()
 
-    val n = nodes.count()
+    val n = nodesPre.queryExecution.observedMetrics("pr_nodes").getLong(0)
     require(n > 0, "weightedPageRank: empty graph")
     val r0 = scale / n
     val base = (100L - dampingPct) * r0 / 100L
@@ -339,8 +328,6 @@ object WebGraph {
         .localCheckpoint()
       ranks = next
     }
-    nodes.unpersist()
-    eo.unpersist()
     ranks
   }
 
@@ -426,7 +413,7 @@ object WebGraph {
     *
     * Scale shape — the [[pageRank]] discipline: the neighbor list
     * (both directions of each distinct non-loop edge) is built ONCE and
-    * persisted — at 100 TB this is the big frame, invariant across the
+    * checkpointed — at 100 TB this is the big frame, invariant across the
     * loop. Each iteration is one hash join of neighbors against the
     * skinny label frame (one row per NODE — hosts, not documents) plus
     * two aggregations (vote counts keyed by (node, label), then the
@@ -450,13 +437,9 @@ object WebGraph {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
-      .persist()
-    val noLoop = e.filter(col("src") =!= col("dst"))
+      .localCheckpoint()
     // loop-invariant neighbor SET (multi-edges vote once)
-    val nbr = noLoop.select(col("src").as("node"), col("dst").as("nb"))
-      .union(noLoop.select(col("dst").as("node"), col("src").as("nb")))
-      .distinct()
-      .persist()
+    val nbr = undirectedNbr(edges, srcCol, dstCol).localCheckpoint()
     var labels = nodes.select(col("node"), col("node").as("lbl"))
     var iter = 0
     while (iter < iterations) {
@@ -473,8 +456,6 @@ object WebGraph {
         .localCheckpoint() // cut lineage: plan depth stays O(1), not O(k)
       iter += 1
     }
-    nodes.unpersist()
-    nbr.unpersist()
     labels.select(col("node"), col("lbl").as("community"))
   }
 
@@ -486,7 +467,7 @@ object WebGraph {
     * follows edge direction.
     *
     * Scale shape: the edge frame is the loop-invariant big side,
-    * persisted once; each round is one join of edges against the
+    * checkpointed once; each round is one join of edges against the
     * current frontier (shrinking, usually ≪ nodes) plus one anti-join
     * against the visited set, both hash-partitioned on node; visited is
     * localCheckpoint-ed so the plan stays one round deep. Terminates
@@ -500,12 +481,7 @@ object WebGraph {
                    source: String, maxHops: Int = 10): DataFrame = {
     require(maxHops >= 1 && maxHops <= 64,
       s"maxHops must be in [1,64], got $maxHops")
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull)
-      .distinct()
-      .persist()
+    val e = edgePlane(edges, srcCol, dstCol, "src", "dst", keepLoops = true)
     val spark = edges.sparkSession
     import spark.implicits._
     var visited = Seq((source, 0L)).toDF("node", "hop").localCheckpoint()
@@ -526,7 +502,6 @@ object WebGraph {
         frontier = next
       }
     }
-    e.unpersist()
     visited
   }
 
@@ -537,7 +512,7 @@ object WebGraph {
     * with INTEGER weights so every distance is exact and the unrolled
     * SQL replay is bit-equal. Requires non-negative weights.
     *
-    * Scale shape: edges persisted once; each round is one join of
+    * Scale shape: edges checkpointed once; each round is one join of
     * edges against the reached frontier plus one full-outer merge on
     * the skinny distance frame, localCheckpoint-ed to keep the plan
     * O(1) deep. Early exit when a round improves nothing (one bounded
@@ -560,7 +535,7 @@ object WebGraph {
       .filter(col("src").isNotNull && col("dst").isNotNull &&
         col("w").isNotNull && col("w") >= 0)
       .groupBy("src", "dst").agg(min(col("w")).as("w")) // parallel edges
-      .persist()
+      .localCheckpoint()
     val spark = edges.sparkSession
     import spark.implicits._
     var dist = Seq((source, 0L)).toDF("node", "dist").localCheckpoint()
@@ -581,7 +556,6 @@ object WebGraph {
       done = merged.filter(col("__improved")).isEmpty
       dist = merged.select(col("node"), col("dist")).localCheckpoint()
     }
-    e.unpersist()
     dist
   }
 
@@ -673,7 +647,7 @@ object WebGraph {
     * as any sequential peel.
     *
     * Scale shape: the undirected neighbor-set frame is built once and
-    * persisted (the loop-invariant big side — 2·|E| rows); each round
+    * checkpointed (the loop-invariant big side — 2·|E| rows); each round
     * is one semi-join of neighbors against the shrinking survivor set,
     * one degree aggregation, and one filter, with the survivor frame
     * (nodes only — the skinny side) localCheckpoint-ed so the plan
@@ -690,16 +664,7 @@ object WebGraph {
             k: Int, maxRounds: Int = 200): DataFrame = {
     require(k >= 1, s"k must be >= 1, got $k")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val e = edges
-      .select(col(srcCol).cast("string").as("src"),
-        col(dstCol).cast("string").as("dst"))
-      .filter(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-    // undirected simple view: each unordered pair once per direction
-    val nbr = e.select(col("src").as("node"), col("dst").as("nb"))
-      .union(e.select(col("dst").as("node"), col("src").as("nb")))
-      .distinct()
-      .persist()
+    val nbr = undirectedNbr(edges, srcCol, dstCol).localCheckpoint()
     var alive = nbr.select(col("node")).distinct().localCheckpoint()
     var n = alive.count()
     var round = 0
@@ -717,17 +682,10 @@ object WebGraph {
       n = m
       round += 1
     }
-    // materialize the core-degree frame BEFORE releasing the persisted
-    // neighbor frame — unpersisting first would make the returned (lazy)
-    // DataFrame recompute the 2|E| neighbor build from scratch on its
-    // first action (the labelPropagation eager-checkpoint discipline)
-    val core = nbr
+    nbr
       .join(alive, "node")
       .join(alive.withColumnRenamed("node", "nb"), "nb")
       .groupBy("node").agg(count(lit(1)).as("core_degree"))
-      .localCheckpoint(true)
-    nbr.unpersist()
-    core
   }
 
   /** k-truss decomposition (Cohen 2008 "Trusses: cohesive subgraphs
@@ -814,7 +772,7 @@ object WebGraph {
     * are proximity SCORES, not a probability simplex, and the replay
     * is bit-exact for it.
     *
-    * Scale shape identical to [[pageRank]]: edge⋈outdeg persisted
+    * Scale shape identical to [[pageRank]]: edge⋈outdeg checkpointed
     * once, one join + one agg per iteration over skinny rank frames,
     * localCheckpoint per round. Seeds arrive as a DataFrame (not a
     * driver-side list) so a seed set of any size — "all hosts the
@@ -841,20 +799,21 @@ object WebGraph {
     val nodes = e.select(col("src").as("node"))
       .union(e.select(col("dst").as("node")))
       .distinct()
-      .persist()
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("outdeg"))
-    val eo = e.join(outdeg, "src").persist()
+    val eo = e.join(outdeg, "src").localCheckpoint()
     // seed flag joined onto the node frame once — seeds outside the
     // graph are ignored (they have no edges to walk)
     val seedNodes = seeds
       .select(col(seedCol).cast("string").as("node"))
       .filter(col("node").isNotNull)
       .distinct()
-    val flagged = nodes
+    val flaggedPre = nodes
       .join(seedNodes.withColumn("__seed", lit(true)), Seq("node"), "left")
       .select(col("node"), coalesce(col("__seed"), lit(false)).as("__seed"))
-      .persist()
-    val nSeeds = flagged.filter(col("__seed")).count()
+      .observe("ppr_seeds", count(when(col("__seed"), lit(1))).as("__n"))
+    val flagged = flaggedPre.localCheckpoint()
+    val nSeeds =
+      flaggedPre.queryExecution.observedMetrics("ppr_seeds").getLong(0)
     require(nSeeds > 0, "personalizedPageRank: no seed is in the graph")
     val r0 = scale / nSeeds
     val base = (100L - dampingPct) * r0 / 100L
@@ -877,9 +836,6 @@ object WebGraph {
         .localCheckpoint() // cut lineage: plan depth stays O(1), not O(k)
       iter += 1
     }
-    nodes.unpersist()
-    eo.unpersist()
-    flagged.unpersist()
     ranks
   }
 
@@ -930,7 +886,7 @@ object WebGraph {
     * the replay is exact at any graph size.
     *
     * Scale shape: the undirected neighbor frame and the degree frame
-    * are loop-invariant and persisted once; each round is one
+    * are loop-invariant and checkpointed once; each round is one
     * neighbor⋈labels aggregation to the (node, candidate-community)
     * plane, one |communities|-sized tot aggregation, and one labels
     * update, all keyed joins — the labels frame localCheckpoints so the
@@ -982,10 +938,10 @@ object WebGraph {
             col("__w0")))
           .groupBy("node", "nb")
           .agg(sum(col("__w0")).as("w"))
-    }).persist()
+    }).localCheckpoint()
     val deg = nbr.groupBy("node")
       .agg(coalesce(sum(col("w")).cast("bigint"), lit(0L)).as("deg"))
-      .persist()
+      .localCheckpoint()
     val m2Frame = deg.agg(sum(col("deg")).cast("decimal(38,0)").as("__m2"))
     val dec = "decimal(19,0)"
     // the node degree rides INSIDE the labels frame: it is loop-invariant
@@ -993,7 +949,6 @@ object WebGraph {
     // (two exchange instances — `ld` fed two lazy subtrees) for the cost
     // of one long column in the skinny checkpointed frame
     var labels = deg.select(col("node"), col("node").as("comm"), col("deg"))
-      .localCheckpoint(true)
     var round = 0
     while (round < rounds) {
       val ld = labels // (node, comm, deg) — shared by tot and self
@@ -1042,7 +997,6 @@ object WebGraph {
         .select(col("node"), col("__w.cand").as("__to"),
           conv(substring(md5(col("node")), 1, 12), 16, 10).cast("long")
             .as("__h"))
-        .persist() // feeds the two blocking-join sides + moves
       // independent-set scheduling: a wanting node is BLOCKED when any
       // wanting neighbor carries a smaller (hash, id) priority — movers
       // are the hash-local-minima, never two adjacent
@@ -1059,11 +1013,8 @@ object WebGraph {
         .select(col("node"), coalesce(col("__to"), col("comm")).as("comm"),
           col("deg"))
         .localCheckpoint(true) // plan depth stays O(1) across rounds
-      want.unpersist() // the eager checkpoint above consumed it
       round += 1
     }
-    nbr.unpersist()
-    deg.unpersist()
     labels.select(col("node"), col("comm").as("community"))
   }
 
@@ -1112,19 +1063,18 @@ object WebGraph {
       .filter(col("comm0") =!= col("__cn"))
       .groupBy(col("comm0").as("node"), col("__cn").as("nb"))
       .agg(count(lit(1)).as("w"))
-      .persist()
+      .localCheckpoint()
     // K_c = Σ deg(u) over members == the coarse row sum incl. diagonal
     val deg = nbr.groupBy("node").agg(count(lit(1)).as("__d"))
       .join(lab, "node")
       .groupBy(col("comm0").as("node"))
       .agg(sum(col("__d")).as("deg"))
-      .persist()
+      .localCheckpoint()
     val m2Frame = deg.agg(sum(col("deg")).cast("decimal(38,0)").as("__m2"))
     val dec = "decimal(19,0)"
     // coarse-node degree rides inside the labels frame (loop-invariant) —
     // see louvainCommunities
     var cl = deg.select(col("node"), col("node").as("comm"), col("deg"))
-      .localCheckpoint(true)
     var round = 0
     while (round < rounds) {
       val ld = cl // (node, comm, deg)
@@ -1164,7 +1114,6 @@ object WebGraph {
         .select(col("node"), col("__w.cand").as("__to"),
           conv(substring(md5(col("node")), 1, 12), 16, 10).cast("long")
             .as("__h"))
-        .persist()
       val blocked = cNbr
         .join(want.select(col("node"), col("__h")), "node")
         .join(want.select(col("node").as("nb"), col("__h").as("__hn")),
@@ -1178,11 +1127,8 @@ object WebGraph {
         .select(col("node"), coalesce(col("__to"), col("comm")).as("comm"),
           col("deg"))
         .localCheckpoint(true)
-      want.unpersist()
       round += 1
     }
-    cNbr.unpersist()
-    deg.unpersist()
     lab.join(cl.select(col("node").as("comm0"), col("comm")), "comm0")
       .select(col("node"), col("comm").as("community"))
   }
@@ -1320,7 +1266,7 @@ object WebGraph {
     * level replays bit-exactly as an unrolled CTE. bc(v) = Σ_s δ_s(v),
     * v ∉ sources' own row (endpoints excluded, Brandes' convention).
     *
-    * Scale shape: edges normalized and persisted once; BFS state is the
+    * Scale shape: edges normalized and checkpointed once; BFS state is the
     * skinny (source, node, dist, sigma) frame — ≤ nSources·|V| rows
     * total, frontier-joined against edges one hop at a time with
     * per-round localCheckpoint (O(1) plan depth); the backward pass
@@ -1369,12 +1315,9 @@ object WebGraph {
             s"CAST((CAST(sigma AS DECIMAL(38,0)) * (${scale}L + __dw))" +
               " div __sw AS BIGINT)")), lit(0L)).as("delta"))
         // EAGER on purpose: these per-level checkpoints are the only
-        // actions of the backward sweep, so they are what keeps the
-        // materialization INSIDE the window where `e` is persisted. A
-        // lazy spelling (tried this session, −2% local) defers the whole
-        // sweep past e.unpersist() into the caller's action, which would
-        // recompute the edge distinct per level — depth× extra shuffles
-        // at cluster scale for a local round-trip saving.
+        // actions of the backward sweep. A lazy spelling (measured −2%
+        // local) defers the whole sweep into the caller's action as one
+        // depth-deep job DAG.
         .localCheckpoint() // O(1)-deep plan across levels
       acc = acc.unionByName(delta.select(col("s"), col("node"),
         col("delta")))
@@ -1382,7 +1325,6 @@ object WebGraph {
     val bc = acc.filter(col("node") =!= col("s"))
       .groupBy("node")
       .agg(sum(col("delta")).as("bc_scaled"))
-    e.unpersist()
     nodes.join(bc, Seq("node"), "left")
       .select(col("node"),
         coalesce(col("bc_scaled"), lit(0L)).as("bc_scaled"))
@@ -1400,20 +1342,15 @@ object WebGraph {
     * (O(1) plan depth; the per-round emptiness probe is the only
     * action).
     *
-    * Returns (edges — PERSISTED, caller unpersists; nodes;
-    * visited = (s, node, dist, sigma); depth — the first empty level
-    * when early-exited, else maxDepth).
+    * Returns (edges — the checkpointed [[edgePlane]]: nothing to
+    * release, its blocks live until the frame is unreachable and the
+    * ContextCleaner drops them; nodes; visited = (s, node, dist, sigma);
+    * depth — the first empty level when early-exited, else maxDepth).
     */
   private def sampledBfs(edges: DataFrame, srcCol: String, dstCol: String,
                          nSources: Int, maxDepth: Int)
       : (DataFrame, DataFrame, DataFrame, Int) = {
-    val e = edges
-      .select(col(srcCol).cast("string").as("esrc"),
-        col(dstCol).cast("string").as("edst"))
-      .filter(col("esrc").isNotNull && col("edst").isNotNull &&
-        col("esrc") =!= col("edst"))
-      .distinct()
-      .persist()
+    val e = edgePlane(edges, srcCol, dstCol)
     val nodes = e.select(col("esrc").as("node"))
       .unionByName(e.select(col("edst").as("node"))).distinct()
       .localCheckpoint() // feeds source top-k AND the final outer join
@@ -1483,12 +1420,11 @@ object WebGraph {
       s"nSources must be in [1,4096], got $nSources")
     require(maxDepth >= 1 && maxDepth <= 64,
       s"maxDepth must be in [1,64], got $maxDepth")
-    val (e, nodes, visited, _) =
+    val (_, nodes, visited, _) =
       sampledBfs(edges, srcCol, dstCol, nSources, maxDepth)
     val h = visited.filter(col("dist") > 0)
       .select(col("node"), expr(s"${scale}L div dist").as("__t"))
       .groupBy("node").agg(sum(col("__t")).as("h_scaled"))
-    e.unpersist()
     nodes.join(h, Seq("node"), "left")
       .select(col("node"),
         coalesce(col("h_scaled"), lit(0L)).as("h_scaled"))
@@ -1516,9 +1452,8 @@ object WebGraph {
       s"nSources must be in [1,4096], got $nSources")
     require(maxDepth >= 1 && maxDepth <= 64,
       s"maxDepth must be in [1,64], got $maxDepth")
-    val (e, _, visited, d) =
+    val (_, _, visited, d) =
       sampledBfs(edges, srcCol, dstCol, nSources, maxDepth)
-    e.unpersist()
     require(d < maxDepth,
       s"distanceDistribution: BFS reached maxDepth=$maxDepth — raise " +
         "maxDepth (truncation would understate the tail)")
@@ -1551,9 +1486,8 @@ object WebGraph {
       s"nSources must be in [1,4096], got $nSources")
     require(maxDepth >= 1 && maxDepth <= 64,
       s"maxDepth must be in [1,64], got $maxDepth")
-    val (e, _, visited, d) =
+    val (_, _, visited, d) =
       sampledBfs(edges, srcCol, dstCol, nSources, maxDepth)
-    e.unpersist()
     require(d < maxDepth,
       s"distanceMoments: BFS reached maxDepth=$maxDepth — raise " +
         "maxDepth (truncation would understate the moments)")
@@ -1651,13 +1585,7 @@ object WebGraph {
                            dstCol: String, maxT: Int = 64,
                            p: Int = 9): DataFrame = {
     require(maxT >= 1 && maxT <= 256, s"maxT must be in [1,256], got $maxT")
-    val e = edges
-      .select(col(srcCol).cast("string").as("esrc"),
-        col(dstCol).cast("string").as("edst"))
-      .filter(col("esrc").isNotNull && col("edst").isNotNull &&
-        col("esrc") =!= col("edst")) // v ∈ B_t(v) already
-      .distinct()
-      .persist()
+    val e = edgePlane(edges, srcCol, dstCol) // v ∈ B_t(v) already
     val nodes = e.select(col("esrc").as("node"))
       .unionByName(e.select(col("edst").as("node"))).distinct()
     // the exact change detector (Σ rho_max, register rows) rides each
@@ -1725,12 +1653,10 @@ object WebGraph {
             s"$maxT — raise maxT (truncating understates the diameter)")
         readFut = Par.grouped(roundRead(grown))
         readT = t
-        c.unpersist() // its read was harvested above
         c = grown
         prev = cur
       }
     }
-    e.unpersist()
     val spark = edges.sparkSession
     import spark.implicits._
     rows.toSeq.toDF("t", "nf_est")
@@ -1751,15 +1677,10 @@ object WebGraph {
                      maxT: Int = 64, p: Int = 9,
                      reverse: Boolean = false): DataFrame = {
     require(maxT >= 1 && maxT <= 256, s"maxT must be in [1,256], got $maxT")
-    val e0 = edges
-      .select(col(srcCol).cast("string").as("esrc"),
-        col(dstCol).cast("string").as("edst"))
-      .filter(col("esrc").isNotNull && col("edst").isNotNull &&
-        col("esrc") =!= col("edst"))
-      .distinct()
-    val e = (if (reverse) e0.select(col("edst").as("esrc"),
+    val e0 = edgePlane(edges, srcCol, dstCol)
+    val e = if (reverse) e0.select(col("edst").as("esrc"),
         col("esrc").as("edst"))
-      else e0).persist()
+      else e0
     val nodes = e.select(col("esrc").as("node"))
       .unionByName(e.select(col("edst").as("node"))).distinct()
     // the exact change detector (Σ rho_max, register rows) rides the
@@ -1822,12 +1743,10 @@ object WebGraph {
         // thread and race the main loop's increment (mislabeled rounds)
         val tRead = t
         estFut = Par.grouped(estRows(tRead, grown)) // CHANGED rounds only
-        c.unpersist() // its serving rows were harvested above
         c = grown
         prev = cur
       }
     }
-    e.unpersist()
     rows.reduce(_ unionByName _)
       .select(col("node"), col("t"), col("ball_est"))
   }
@@ -1954,7 +1873,7 @@ object WebGraph {
     * Scale shape: per hop one frontier-against-edges join on the skinny
     * (s, node) plane with per-hop localCheckpoint (O(1) plan depth,
     * the [[sampledBfs]] discipline); per round one semi-join pair
-    * restricts the persisted edge frame to the residual; per trim wave
+    * restricts the checkpointed edge frame to the residual; per trim wave
     * one anti-join pair + one (small-side, broadcastable) edge
     * restriction; settled components accumulate as checkpointed skinny
     * (node, component) rows. Only emptiness probes reach the driver.
@@ -1967,19 +1886,21 @@ object WebGraph {
   def stronglyConnectedComponents(edges: DataFrame, srcCol: String,
                                   dstCol: String, pivotsPerRound: Int = 64,
                                   maxDepth: Int = 32,
-                                  maxRounds: Int = 64): DataFrame = {
+                                  maxRounds: Int = 64): DataFrame =
+    scc(edgePlane(edges, srcCol, dstCol), pivotsPerRound, maxDepth,
+      maxRounds)
+
+  /** [[stronglyConnectedComponents]] over an already-built [[edgePlane]]
+    * `e0` — [[bowtieDecomposition]] hands its own plane in instead of
+    * normalizing the same edges twice.
+    */
+  private def scc(e0: DataFrame, pivotsPerRound: Int, maxDepth: Int,
+                  maxRounds: Int): DataFrame = {
     require(pivotsPerRound >= 1 && pivotsPerRound <= 4096,
       s"pivotsPerRound must be in [1,4096], got $pivotsPerRound")
     require(maxDepth >= 1 && maxDepth <= 256,
       s"maxDepth must be in [1,256], got $maxDepth")
     require(maxRounds >= 1, s"maxRounds must be >= 1, got $maxRounds")
-    val e0 = edges
-      .select(col(srcCol).cast("string").as("esrc"),
-        col(dstCol).cast("string").as("edst"))
-      .filter(col("esrc").isNotNull && col("edst").isNotNull &&
-        col("esrc") =!= col("edst")) // self-loops never change SCCs
-      .distinct()
-      .persist()
     val allNodesPre = e0.select(col("esrc").as("node"))
       .unionByName(e0.select(col("edst").as("node"))).distinct()
       .observe("scc_res_probe", count(lit(1)).cast("bigint").as("__n"))
@@ -2036,13 +1957,12 @@ object WebGraph {
               "left_anti")
             .select(col("esrc"), col("edst"))
             .localCheckpoint()
-          if (eR ne e0) eR.unpersist()
           eR = eNext
         }
       }
       if (waves.nonEmpty) {
         // every wave is already materialized (inside its residual job),
-        // so the accumulator union is a LAZY chain over cached leaves
+        // so the accumulator union is a LAZY chain over checkpointed leaves
         val settled = waves.reduce(_ unionByName _)
           .select(col("node"), col("node").as("component"))
         comps = Some(comps.fold(settled)(_ unionByName settled)
@@ -2066,7 +1986,9 @@ object WebGraph {
       // cluster as on local). Both run over the shortcut-accelerated
       // plane — identical reach sets in about half the hops; trim and
       // the edge restrictions keep using the TRUE edges (degrees and
-      // adjacency must not see shortcuts).
+      // adjacency must not see shortcuts). `eAcc` is a checkpoint, not a
+      // cache entry: unpersisting it would free nothing — its blocks go
+      // when the round drops the frame (ContextCleaner).
       import scala.concurrent.Await
       import scala.concurrent.ExecutionContext.Implicits.global
       val eAcc = accelerated(eR)
@@ -2109,14 +2031,11 @@ object WebGraph {
             "left_semi")
           .select(col("esrc"), col("edst"))
           .localCheckpoint()
-        if (eR ne e0) eR.unpersist()
         eR = eNext
         // the settled SCCs' removal exposes a fresh acyclic fringe
         trim(); done = residualCount == 0L
       }
     }
-    if (eR ne e0) eR.unpersist()
-    e0.unpersist()
     comps.getOrElse(allNodes.select(col("node"),
       col("node").as("component")))
   }
@@ -2153,18 +2072,12 @@ object WebGraph {
     import scala.concurrent.Await
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration.Duration
-    val e0 = edges
-      .select(col(srcCol).cast("string").as("esrc"),
-        col(dstCol).cast("string").as("edst"))
-      .filter(col("esrc").isNotNull && col("edst").isNotNull &&
-        col("esrc") =!= col("edst"))
-      .distinct()
-      .persist()
+    val e0 = edgePlane(edges, srcCol, dstCol)
     val nodes = e0.select(col("esrc").as("node"))
       .unionByName(e0.select(col("edst").as("node"))).distinct()
       .localCheckpoint()
-    val comps = stronglyConnectedComponents(edges, srcCol, dstCol,
-      pivotsPerRound, maxDepth, maxRounds).localCheckpoint(true)
+    val comps = scc(e0, pivotsPerRound, maxDepth, maxRounds)
+      .localCheckpoint(true)
     val giant = comps.groupBy("component").agg(count(lit(1)).as("__sz"))
       .orderBy(col("__sz").desc, col("component")) // TakeOrdered, 1 row
       .limit(1)
@@ -2210,10 +2123,8 @@ object WebGraph {
       .unionByName(tubes.withColumn("region", lit("tubes")))
       .unionByName(tendrils.withColumn("region", lit("tendrils")))
       .unionByName(disconnected.withColumn("region", lit("disconnected")))
-    val out = comps.join(regions, "node")
+    comps.join(regions, "node")
       .select(col("node"), col("component"), col("region"))
-    e0.unpersist()
-    out
   }
 
   /** Condensation of a directed graph by an SCC labeling (the quotient
@@ -2458,6 +2369,32 @@ object WebGraph {
         lit(t.toLong).as("step"), col("__cur").as("node")))
     }
     acc
+  }
+
+  /** The normalized directed edge plane of the loop kernels: endpoints
+    * cast to string as (`s`, `d`), null endpoints dropped, self-loops
+    * dropped unless `keepLoops` (a self-loop never changes a reach set,
+    * an SCC or a ball), distinct, and localCheckpoint-ed eagerly.
+    *
+    * Every loop-invariant frame in this object is CHECKPOINTED, never
+    * persisted. Spark keys its cache by plan, so two kernels over the
+    * same edges (bowtie and its SCC pass; the two kernels q275 runs
+    * side by side through [[Par.grouped]]) would share one cache entry,
+    * and the first `unpersist()` would evict the other's live plane,
+    * which then re-scans its source. A checkpoint belongs to the frame
+    * that made it and registers nothing in the session cache, so there
+    * is nothing to unpersist either (`unpersist()` on a checkpointed
+    * frame frees nothing): its blocks live until the frame is
+    * unreachable and the ContextCleaner drops them.
+    */
+  private def edgePlane(edges: DataFrame, srcCol: String, dstCol: String,
+                        s: String = "esrc", d: String = "edst",
+                        keepLoops: Boolean = false): DataFrame = {
+    val e = edges.select(col(srcCol).cast("string").as(s),
+        col(dstCol).cast("string").as(d))
+      .filter(col(s).isNotNull && col(d).isNotNull)
+    (if (keepLoops) e else e.filter(col(s) =!= col(d)))
+      .distinct().localCheckpoint()
   }
 
   /** Bounded-degree 2-hop shortcut edges: for every middle node, join

@@ -93,6 +93,25 @@ class EtlSpec extends AnyFunSuite {
     assert(algeria.getDouble(algeria.fieldIndex("total_confirmed_deaths")) == 12.9)
   }
 
+  test("ELT pipeline adopts table locations an earlier JVM left without catalog entries") {
+    import org.apache.spark.sql.catalyst.TableIdentifier
+    val db = "elt_orphans"
+    Sinks.ensureDatabase(spark, db)
+    def orphan(table: String) = {
+      spark.sql(s"DROP TABLE IF EXISTS $db.$table")
+      spark.sessionState.catalog.defaultTablePath(TableIdentifier(table, Some(db))).toString
+    }
+    // an earlier run's final table holds two rows; its staging location is
+    // an empty directory (created, never loaded)
+    spark.sql("SELECT 'Chad' AS entity, TIMESTAMP_NTZ '2020-03-28 00:00:00' AS Day, " +
+        "CAST(d AS DOUBLE) AS total_confirmed_deaths FROM VALUES (1), (2) AS t(d)")
+      .write.parquet(orphan("final_covid_data"))
+    Files.createDirectories(Paths.get(new java.net.URI(orphan("stg_covid_data"))))
+    assert(!spark.catalog.tableExists(s"$db.final_covid_data"))
+    // the 8 rows with deaths > 0 append to the adopted history
+    assert(Jobs.eltPipeline(spark, fixture, db) == 10L)
+  }
+
   test("streaming ingest: AvailableNow drains files exactly once") {
     val dir = Files.createTempDirectory("graft-stream-in")
     val out = Files.createTempDirectory("graft-stream-out").resolve("data").toString

@@ -76,6 +76,48 @@ class FixturesSpec extends AnyFunSuite {
       "unrelated parquet timestamp reads must keep session-default NTZ inference")
   }
 
+  test("fixture schemas are memoized per (sfDir, table): a second load launches no job") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(e.properties.getProperty("spark.jobGroup.id")))
+    }
+    def inGroup[T](body: => T): (T, String) = {
+      val g = java.util.UUID.randomUUID.toString
+      sc.setJobGroup(g, "fixture-schema-memo")
+      try (body, g) finally sc.clearJobGroup()
+    }
+    // jobs launched by one load: a marker job behind it on the listener
+    // bus shows that every event of the load has been delivered
+    def load(dir: String) = {
+      val (df, g) = inGroup(Tables.load(spark, dir, "region"))
+      val (_, marker) = inGroup(sc.parallelize(Seq(1), 1).count())
+      eventually(timeout(30.seconds)) { assert(groups.contains(marker)) }
+      (df, groups.asScala.count(_ == g))
+    }
+    import spark.implicits._
+    val dirA = java.nio.file.Files.createTempDirectory("graft-memo-a").toString
+    val dirB = java.nio.file.Files.createTempDirectory("graft-memo-b").toString
+    Seq(1, 2, 3).toDF("a").write.parquet(s"$dirA/region.parquet")
+    Seq(("x", 7L)).toDF("b", "c").write.parquet(s"$dirB/region.parquet")
+    sc.addSparkListener(listener)
+    try {
+      val (first, firstJobs) = load(dirA)
+      assert(firstJobs >= 1, "the first load infers the schema with a job")
+      val (second, secondJobs) = load(dirA)
+      assert(secondJobs == 0, s"a second load launched $secondJobs job(s)")
+      assert(second.schema == first.schema && second.count() == 3L)
+      val (other, otherJobs) = load(dirB)
+      assert(other.columns.toSeq == Seq("b", "c") && otherJobs >= 1,
+        "a different sfDir must not be served from the memo")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("embeddings vectors are float arrays with a consistent dimension") {
     import org.apache.spark.sql.functions._
     val emb = Tables.embeddings(spark, sfDirs.head)
